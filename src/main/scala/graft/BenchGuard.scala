@@ -20,7 +20,7 @@ import java.nio.file.{Files, Paths}
   * 4.2–5.0 s by design — iteration count × job latency).
   *
   * The checked (and recorded) number is the BEST of the two runs: a
-  * single run's tail jitter false-reds ~0.5% of a 434-query registry
+  * single run's tail jitter false-reds ~0.5% of the registry's queries
   * (measured: one kernel read 0.86 s then 1.44 s back-to-back on an
   * idle box), while a genuine regression inflates BOTH runs — best-of-2
   * keeps the red reproducible without widening the band.

@@ -9,11 +9,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `localCheckpoint(true)` (lineage truncation for loops, build-once for
   * self-joins). Each checkpoint persists blocks (MEMORY_AND_DISK) that
   * Spark never drops on its own — in a session that runs the whole
-  * 195-query registry back-to-back (the driver's Bench / Verify mains),
+  * registry back-to-back (the Bench / Verify mains),
   * dead blocks from finished queries pile up until storage memory is
   * full, and every later query pays eviction churn + GC instead of
   * compute. (Observed: the same per-row kernel costs 1.2 s in a fresh
-  * session and 17+ s late in an un-swept 195-query run.)
+  * session and 17+ s late in an un-swept run of the whole registry,
+  * measured when it held 195 queries.)
   *
   * `sweep` drops every persistent RDD that is not PINNED. Pinning exists
   * for the one legitimate cross-query cache: the shared t=0.5 pair index

@@ -21,7 +21,14 @@ import org.apache.spark.sql.functions._
   * Spark shape: ONE shuffle — union source (priority 1) with target
   * (priority 0), then per-key window functions decide which row
   * survives. The two-join alternative (upsert + anti-join for deletes)
-  * shuffles the 100 TB target twice; this shuffles it once.
+  * shuffles the 100 TB target twice; this shuffles it once. With
+  * `clusterBy` (a subset of `keys`) that one shuffle is an explicit
+  * hash repartition of the union on those columns: the windows'
+  * clustering on `keys` is already satisfied by it, and a caller
+  * writing `partitionBy(clusterBy)` reuses the same layout, so the
+  * merge AND its partitioned write still cost one exchange
+  * ([[graft.sinks.KeyedParquetSink.mergeInto]] clusters on its bucket
+  * column this way).
   *
   * `deleteCond` is evaluated on SOURCE rows (before column alignment,
   * so it may reference source-only columns like a CDC `change` marker).
@@ -35,7 +42,8 @@ object Merge {
             updateMatched: Boolean = true,
             insertUnmatched: Boolean = true,
             deleteCond: Option[Column] = None,
-            versionCols: Seq[String] = Nil): DataFrame = {
+            versionCols: Seq[String] = Nil,
+            clusterBy: Seq[String] = Nil): DataFrame = {
     val cols = target.columns.toSeq
     val s = source
       .withColumn("_graft_del",
@@ -60,7 +68,8 @@ object Merge {
     val srcWinner = col("_graft_pri") === 1 && col("_graft_rn_s") === 1
     val tgtFirst = col("_graft_pri") === 0 && col("_graft_rn_t") === 1
 
-    s.unionByName(t)
+    val both = s.unionByName(t)
+    (if (clusterBy.isEmpty) both else both.repartition(clusterBy.map(col): _*))
       .withColumn("_graft_rn_s", row_number().over(wSrcFirst))
       .withColumn("_graft_rn_t", row_number().over(wTgtFirst))
       .withColumn("_graft_keep",

@@ -167,6 +167,11 @@ object Pipelines {
     *     centroids ([[graft.ops.IvfIndex.append]], no retrain) and are
     *     immediately searchable.
     *
+    * Steps 3-5 read only the checkpointed uniques and each writes (or
+    * reads) its own artifact, so they run at the same time
+    * ([[Overlap]]; the index fold itself overlaps its three table
+    * upserts). A failure in any of them surfaces after all three end.
+    *
     * `batch` carries (doc_id, text, embedding); rows with a NULL
     * embedding still dedup + price but skip the ANN append. Returns the
     * per-stage counts. */
@@ -193,15 +198,16 @@ object Pipelines {
     val (tokens, pieces, appended) =
       if (nUniq == 0L) (0L, 0L, 0L)
       else {
-        IncrementalDedup.append(spark, uniq, "doc_id", "text", dedupPath,
-          numBuckets = dedupBuckets)
-        val s = TokenizerModel.segment(spark, uniq, "doc_id", "text", bpePath)
-          .agg(coalesce(sum(col("n_tokens")), lit(0L)).as("t"),
-            coalesce(sum(col("n_pieces")), lit(0L)).as("p")).head
-        val a = IvfIndex.append(spark,
-          uniq.where(col("embedding").isNotNull)
-            .select(col("doc_id"), col("embedding")),
-          "doc_id", "embedding", ivfPath, ivfBuckets)
+        val (_, s, a) = Overlap(
+          IncrementalDedup.append(spark, uniq, "doc_id", "text", dedupPath,
+            numBuckets = dedupBuckets),
+          TokenizerModel.segment(spark, uniq, "doc_id", "text", bpePath)
+            .agg(coalesce(sum(col("n_tokens")), lit(0L)).as("t"),
+              coalesce(sum(col("n_pieces")), lit(0L)).as("p")).head,
+          IvfIndex.append(spark,
+            uniq.where(col("embedding").isNotNull)
+              .select(col("doc_id"), col("embedding")),
+            "doc_id", "embedding", ivfPath, ivfBuckets))
         (s.getLong(0), s.getLong(1), a)
       }
     IngestReport(rowsIn, byStatus.getOrElse("exact_dup", 0L),
@@ -225,8 +231,10 @@ object Pipelines {
     *     ([[graft.ops.IvfIndex.delete]]).
     * The tokenizer model (and the ANN centroids) stay: they are
     * aggregate statistics over many documents, not subject rows — the
-    * same contract as append's no-retrain. Idempotent: a second run
-    * removes 0 everywhere (the erasure receipt a re-audit checks). */
+    * same contract as append's no-retrain. The dedup-index and ANN
+    * erasures touch disjoint stores and run at the same time
+    * ([[Overlap]]). Idempotent: a second run removes 0 everywhere (the
+    * erasure receipt a re-audit checks). */
   def erase(spark: SparkSession, ids: DataFrame, idCol: String,
             dedupPath: String, ivfPath: String, dedupBuckets: Int = 8,
             ivfBuckets: Int = 16): EraseReport = {
@@ -234,10 +242,10 @@ object Pipelines {
     val idf = ids.select(col(idCol).cast("long").as("doc")).distinct()
       .localCheckpoint(true)
     val n = idf.count()
-    val (h, b, s) = IncrementalDedup.erase(spark, idf, "doc", dedupPath,
-      dedupBuckets)
-    val ann = IvfIndex.delete(spark, ivfPath,
-      idf.select(col("doc").as("vid")), "vid", ivfBuckets)
+    val ((h, b, s), ann) = Overlap(
+      IncrementalDedup.erase(spark, idf, "doc", dedupPath, dedupBuckets),
+      IvfIndex.delete(spark, ivfPath,
+        idf.select(col("doc").as("vid")), "vid", ivfBuckets))
     EraseReport(n, h, b, s, ann)
   }
 

@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.atomic.AtomicReference
+import scala.util.control.NonFatal
 
 /** Pipeline runner — the reference's orchestration surface
   * (index.js:46-355: start/force-run/status, etlService.js:416-591:
@@ -138,7 +139,9 @@ object Runner {
   /** Run stages sequentially; each stage is retried up to `retries` times
     * with linear backoff (reference: RETRY_LIMIT 3, delay between retries).
     * A failing stage stops the pipeline (later stages typically read what
-    * earlier ones wrote). */
+    * earlier ones wrote). Only non-fatal errors count as a failed
+    * attempt: an `InterruptedException` or a VM error (OOM) leaves the
+    * run at once, unretried. */
   def run(spark: SparkSession, stages: Seq[Stage], retries: Int = 3,
           backoffMs: Long = 1000): RunReport = {
     Progress.attach(spark.sparkContext)
@@ -158,7 +161,9 @@ object Runner {
           attempt += 1
           try { rows = s.run(spark).count(); done = true; err = "" }
           catch {
-            case e: Throwable =>
+            // an interrupt or a VM error is not a stage failure to retry:
+            // it propagates at once
+            case NonFatal(e) =>
               err = Option(e.getMessage).getOrElse(e.getClass.getName)
               if (attempt < retries) Thread.sleep(backoffMs * attempt)
           }

@@ -180,16 +180,25 @@ object IncrementalDedup {
   /** Fold a batch's verdict-unique docs into the index (dup docs are
     * dropped upstream, so their hashes/bands/sigs never bloat it).
     * Hash keys are new by construction (status=unique ⇒ md5 not in the
-    * stored set), so the keyed upsert only writes touched buckets. */
+    * stored set), so the keyed upsert only writes touched buckets.
+    * The batch's hashes and signatures are materialized first; the
+    * `hashes`, `bands` and `sigs` upserts then run at the same time
+    * ([[graft.etl.Overlap]]), each reading only those frames and its
+    * own table. */
   def append(spark: SparkSession, uniqueDocs: DataFrame, idCol: String,
              textCol: String, path: String, k: Int = 8, rowsPerBand: Int = 4,
              numBuckets: Int = 8): Unit = {
+    // `uniqueDocs` is typically derived from this index's verdicts, so it
+    // is consumed in full BEFORE any upsert rewrites an index table
     val sigs = sigsOf(uniqueDocs, idCol, textCol, k).localCheckpoint(true)
-    KeyedParquetSink.upsert(spark, s"$path/hashes",
-      hashesOf(uniqueDocs, idCol, textCol), Seq("h"), numBuckets)
-    KeyedParquetSink.upsert(spark, s"$path/bands",
-      Dedup.lshBands(sigs, rowsPerBand), Seq("bandkey", "doc"), numBuckets)
-    KeyedParquetSink.upsert(spark, s"$path/sigs", sigs, Seq("doc"), numBuckets)
+    val hashes = hashesOf(uniqueDocs, idCol, textCol).localCheckpoint(true)
+    graft.etl.Overlap(
+      KeyedParquetSink.upsert(spark, s"$path/hashes", hashes, Seq("h"),
+        numBuckets),
+      KeyedParquetSink.upsert(spark, s"$path/bands",
+        Dedup.lshBands(sigs, rowsPerBand), Seq("bandkey", "doc"), numBuckets),
+      KeyedParquetSink.upsert(spark, s"$path/sigs", sigs, Seq("doc"),
+        numBuckets))
   }
 
   /** Subject ERASURE through the stored dedup index: remove every row
@@ -205,26 +214,32 @@ object IncrementalDedup {
     *     the only GDPR-consistent order (remembering the hash would
     *     retain what was erased).
     * Idempotent; untouched buckets never rewritten (the
-    * [[KeyedParquetSink.deleteMatching]] contract). Returns
+    * [[KeyedParquetSink.deleteMatching]] contract). The three per-table
+    * locate/delete passes run at the same time ([[graft.etl.Overlap]]):
+    * each reads and rewrites only its own table. Returns
     * (hashes, bands, sigs) rows removed. */
   def erase(spark: SparkSession, ids: DataFrame, idCol: String,
             path: String, numBuckets: Int = 8): (Long, Long, Long) = {
     val idf = ids.select(col(idCol).cast("long").as("doc")).distinct()
       .localCheckpoint(true) // feeds three locate/delete passes
-    val sigsN = KeyedParquetSink.deleteMatching(spark, s"$path/sigs",
+    def eraseSigs() = KeyedParquetSink.deleteMatching(spark, s"$path/sigs",
       Seq("doc"), numBuckets, idf, Seq("doc"))
-    val bandRows = KeyedParquetSink.read(spark, s"$path/bands")
-      .select(col("bandkey"), col("doc"))
-      .join(broadcast(idf), Seq("doc"), "left_semi")
-      .localCheckpoint(true) // ≤ |ids|·bands rows: prune + match
-    val bandsN = KeyedParquetSink.deleteMatching(spark, s"$path/bands",
-      Seq("bandkey", "doc"), numBuckets, bandRows, Seq("doc"))
-    val hashRows = KeyedParquetSink.read(spark, s"$path/hashes")
-      .join(broadcast(idf.select(col("doc").as("keeper"))),
-        Seq("keeper"), "left_semi")
-      .select(col("h")).localCheckpoint(true)
-    val hashesN = KeyedParquetSink.deleteMatching(spark, s"$path/hashes",
-      Seq("h"), numBuckets, hashRows, Seq("h"))
-    (hashesN, bandsN, sigsN)
+    def eraseBands() = {
+      val bandRows = KeyedParquetSink.read(spark, s"$path/bands")
+        .select(col("bandkey"), col("doc"))
+        .join(broadcast(idf), Seq("doc"), "left_semi")
+        .localCheckpoint(true) // ≤ |ids|·bands rows: prune + match
+      KeyedParquetSink.deleteMatching(spark, s"$path/bands",
+        Seq("bandkey", "doc"), numBuckets, bandRows, Seq("doc"))
+    }
+    def eraseHashes() = {
+      val hashRows = KeyedParquetSink.read(spark, s"$path/hashes")
+        .join(broadcast(idf.select(col("doc").as("keeper"))),
+          Seq("keeper"), "left_semi")
+        .select(col("h")).localCheckpoint(true)
+      KeyedParquetSink.deleteMatching(spark, s"$path/hashes",
+        Seq("h"), numBuckets, hashRows, Seq("h"))
+    }
+    graft.etl.Overlap(eraseHashes(), eraseBands(), eraseSigs())
   }
 }

@@ -8,11 +8,14 @@ import java.time.format.DateTimeFormatter
 import java.util.concurrent.CopyOnWriteArraySet
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
 
+import scala.util.control.NonFatal
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
 import graft.OracleJson.quote
 import graft.etl.{Cron, Runner}
+import graft.sinks.KeyedParquetSink
 
 /** The reference's HTTP control + SSE serving shell (index.js:46-355)
   * re-expressed over the Spark-native [[Runner]] — the process boundary
@@ -85,6 +88,13 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
     * host is an explicit caller decision (`bindAddress = "0.0.0.0"`) —
     * the reference's open `app.listen(port)` is not inherited. */
   def start(): Int = {
+    // run ids continue the persisted history: a fresh shell numbering from
+    // 1 again would upsert over the earlier runs' (run_id, stage) rows
+    historyPath.filter(KeyedParquetSink.tableExists(spark, _)).foreach { p =>
+      val last = Runner.runHistory(spark, p)
+        .agg(org.apache.spark.sql.functions.max("run_id")).head
+      if (!last.isNullAt(0)) runSeq.set(last.getLong(0))
+    }
     server = HttpServer.create(new InetSocketAddress(
       java.net.InetAddress.getByName(bindAddress), requestedPort), 0)
     // exact-path dispatch: the JDK context matches by PREFIX, so without
@@ -148,7 +158,7 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
         Thread.sleep(15000)
         sseClients.forEach { out =>
           try { out.write(":ping\n\n".getBytes(UTF_8)); out.flush() }
-          catch { case _: Throwable => sseClients.remove(out); () }
+          catch { case NonFatal(_) => sseClients.remove(out); () }
         }
       } catch { case _: InterruptedException => () }
     }, "graft-http-sse-heartbeat")
@@ -161,7 +171,7 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
   def stop(): Unit = {
     stopScheduler()
     heartbeat.getAndSet(None).foreach(_.interrupt())
-    sseClients.forEach(out => try out.close() catch { case _: Throwable => () })
+    sseClients.forEach(out => try out.close() catch { case NonFatal(_) => () })
     sseClients.clear()
     if (server != null) server.stop(0)
     if (pool != null) { pool.shutdownNow(); () }
@@ -235,7 +245,7 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
         "processed" -> report.totalRows.toString,
         "skipped" -> skipped.toString))
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         (500, obj("message" -> quote("Forced ETL process failed"),
           "error" -> quote(Option(e.getMessage).getOrElse(
             e.getClass.getName))))
@@ -353,7 +363,7 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
         out.write(s"event: $event\ndata: $data\n\n".getBytes(UTF_8))
         out.flush()
       } catch {
-        case _: Throwable => sseClients.remove(out); ()
+        case NonFatal(_) => sseClients.remove(out); ()
       }
     }
 
@@ -375,7 +385,7 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
     sseClients.add(out)
     // drain whatever request body exists (none for a GET: returns -1)
     try { ex.getRequestBody.read(); () }
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
   }
 
   private def obj(fields: (String, String)*): String =
@@ -388,7 +398,7 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
       try f.applyOrElse(ex.getRequestMethod,
         (_: String) => (405, obj("message" -> quote("method not allowed"))))
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           (500, obj("message" -> quote("Internal server error"),
             "error" -> quote(Option(e.getMessage).getOrElse(
               e.getClass.getName))))

@@ -2,7 +2,6 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.etl.Upsert
 
 /** Idempotent keyed parquet sink — the load side of the reference's
   * `INSERT … ON DUPLICATE KEY UPDATE` loop (etlService.js:36-53),
@@ -10,17 +9,22 @@ import graft.etl.Upsert
   *
   * Plain parquet has no row-level MERGE, so the table is laid out in
   * `numBuckets` stable hash partitions of the key (`_bucket =
-  * pmod(xxhash64(keys), n)`). An upsert then:
-  *   1. buckets the incoming updates,
+  * pmod(xxhash64(keys), n)`). An upsert ([[mergeInto]]) then:
+  *   1. buckets the incoming updates and collects the touched buckets,
   *   2. reads ONLY the partitions those updates touch (partition pruning),
-  *   3. merges last-write-wins on the key (graft.etl.Upsert),
-  *   4. dynamic-partition-overwrites just the touched partitions.
+  *   3. merges last-write-wins on the key (graft.etl.Merge) behind ONE
+  *      exchange, `repartition(_bucket)` of the update∪table union — it
+  *      serves both the per-key merge and the one-file-per-bucket write,
+  *   4. dynamic-partition-overwrites just the touched partitions, taking
+  *      the surviving buckets from an observation on that same write.
   *
   * Write amplification is |touched partitions| / numBuckets of the table,
   * not the whole table — at 100 TB with well-spread keys an incremental
-  * batch rewrites only the buckets it lands in. The touched-bucket list is
-  * collected to the driver, which is safe because it is bounded by
-  * `numBuckets` (a config, not data volume).
+  * batch rewrites only the buckets it lands in. The touched and surviving
+  * bucket lists reach the driver, which is safe because they are bounded
+  * by `numBuckets` (a config, not data volume). Upserts into DIFFERENT
+  * tables may run concurrently from several driver threads
+  * ([[graft.etl.Overlap]]); upserts into one table must not.
   */
 object KeyedParquetSink {
 
@@ -193,7 +197,16 @@ object KeyedParquetSink {
     * bucket-pruned: only the partitions the source's keys hash into are
     * read and rewritten, so a daily change batch — including its
     * deletes, which are keyed rows like any other — costs
-    * |touched buckets| / numBuckets of the table, never a full rewrite. */
+    * |touched buckets| / numBuckets of the table, never a full rewrite.
+    *
+    * One small job collects the touched buckets (an empty source is a
+    * no-op); the merge and its write then share ONE exchange. The bucket
+    * column leads the merge key and the source∪target union is clustered
+    * by `repartition(_bucket)`: the bucket is a function of the key, so
+    * that exchange satisfies the per-key merge windows and lays the
+    * output out one task, one file, per bucket. The surviving buckets
+    * come from an observation (`collect_set(_bucket)`) on the write
+    * itself — no cache and no second pass over the merge. */
   def mergeInto(spark: SparkSession, path: String, source: DataFrame,
                 keys: Seq[String], numBuckets: Int,
                 updateMatched: Boolean = true,
@@ -204,40 +217,38 @@ object KeyedParquetSink {
     val up = withBucket(source, keys, numBuckets)
     val touched = up.select(BucketCol).distinct()
       .collect().map(_.getInt(0)).sorted           // bounded by numBuckets
+    if (touched.isEmpty) return
     val base = spark.read.parquet(path)
       .where(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
-    val merged = graft.etl.Merge.merge(
-      base.drop(BucketCol),
-      up.drop(BucketCol),
-      keys, updateMatched, insertUnmatched, deleteCond, versionCols)
-    val mergedB = withBucket(merged, keys, numBuckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val survivors = mergedB.select(BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSet // bounded by numBuckets
-      mergedB
-        .repartition(col(BucketCol))
-        .write.partitionBy(BucketCol).mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-      // dynamic overwrite only replaces partitions PRESENT in the output:
-      // a touched bucket whose rows were ALL deleted writes nothing, so
-      // its stale directory would survive and resurrect the deleted keys.
-      // Drop those directories explicitly (≤ numBuckets driver-side ops).
-      val emptied = touched.filterNot(survivors)
-      if (emptied.nonEmpty) {
-        val root = new org.apache.hadoop.fs.Path(path)
-        val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-        emptied.foreach { b =>
-          fs.delete(new org.apache.hadoop.fs.Path(root, s"$BucketCol=$b"), true)
-        }
-        // a merge that deleted the table's last rows must leave a
-        // schema-bearing empty file, or the next read fails inference
-        if (survivors.isEmpty && !fs.listStatus(root)
-              .exists(_.getPath.getName.startsWith(s"$BucketCol=")))
-          keepEmptySchema(spark, path, base.schema)
+    val merged = graft.etl.Merge.merge(base, up, BucketCol +: keys,
+      updateMatched, insertUnmatched, deleteCond, versionCols,
+      clusterBy = Seq(BucketCol))
+    // unique per call: concurrent merges in one session never share it
+    val survivorsObs = new org.apache.spark.sql.Observation(
+      s"graft_survivors_${java.util.UUID.randomUUID()}")
+    merged.observe(survivorsObs, collect_set(col(BucketCol)).as("b"))
+      .write.partitionBy(BucketCol).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(path)
+    val survivors = survivorsObs.get("b")          // bounded by numBuckets
+      .asInstanceOf[scala.collection.Seq[Int]].toSet
+    // dynamic overwrite only replaces partitions PRESENT in the output:
+    // a touched bucket whose rows were ALL deleted writes nothing, so
+    // its stale directory would survive and resurrect the deleted keys.
+    // Drop those directories explicitly (≤ numBuckets driver-side ops).
+    val emptied = touched.filterNot(survivors)
+    if (emptied.nonEmpty) {
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      emptied.foreach { b =>
+        fs.delete(new org.apache.hadoop.fs.Path(root, s"$BucketCol=$b"), true)
       }
-    } finally mergedB.unpersist()
+      // a merge that deleted the table's last rows must leave a
+      // schema-bearing empty file, or the next read fails inference
+      if (survivors.isEmpty && !fs.listStatus(root)
+            .exists(_.getPath.getName.startsWith(s"$BucketCol=")))
+        keepEmptySchema(spark, path, base.schema)
+    }
   }
 
   /** Row-level DELETE against a NON-unique keyed table (one the MERGE

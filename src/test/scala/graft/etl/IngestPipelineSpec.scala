@@ -159,4 +159,141 @@ class IngestPipelineSpec extends AnyFunSuite {
     assert(er2 == Pipelines.EraseReport(2L, 0L, 0L, 0L, 0L),
       s"re-erasure must be a no-op: $er2")
   }
+
+  /** Copy a stored-artifact tree, so two runs start from identical state. */
+  private def copyTree(from: String, to: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    val src = Paths.get(from)
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val dst = Paths.get(to).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dst)
+      else Files.copy(p, dst)
+    } finally walk.close()
+  }
+
+  test("ingest: overlapped artifact writes equal the sequential order; replay ingests 0") {
+    import spark.implicits._
+    import graft.ops.Dedup
+    import graft.sinks.KeyedParquetSink
+    val root = java.nio.file.Files.createTempDirectory("graft-ingest-seq").toString
+    IncrementalDedup.buildIndex(
+      histDocs.toDF("doc_id", "text"), "doc_id", "text", s"$root/a/dedup")
+    TokenizerModel.save(spark,
+      Seq(("the", 1L, 10L), ("engine", 2L, 5L)).toDF("token", "token_id", "n"),
+      Seq((1L, "t h"), (2L, "th e")).toDF("round", "pair"), s"$root/a/bpe")
+    val emb = graft.sources.Tables.embeddings(spark, TestSpark.sf)
+    IvfIndex.build(spark, emb, "vec_id", "embedding", s"$root/a/ivf",
+      numBuckets = 16)
+    copyTree(s"$root/a", s"$root/b")
+    val vecs = emb.where(col("vec_id").isin(5L, 6L, 7L)).orderBy("vec_id")
+      .select(col("embedding")).collect().map(r => Option(r.getSeq[Float](0)))
+      .toSeq
+    assert(vecs.size == 3)
+    val batch = (Seq(
+        (1000001L, "completely novel content that matches nothing stored here"),
+        (1000002L, "another fresh document made of entirely new words inside"),
+        (1000003L, "a third unseen text about tokenizers merges and buckets"),
+        (1000011L, histDocs.head._2),
+        (1000012L,
+          "one two three four five six seven eight nine ten eleven twelve altered"))
+      .zip(vecs ++ Seq(None, None)).map { case ((id, t), v) => (id, t, v) } :+
+      ((1000099L, "   ", None: Option[Seq[Float]])))
+      .toDF("doc_id", "text", "embedding")
+
+    val got = Pipelines.ingest(spark, batch, s"$root/a/dedup", s"$root/a/bpe",
+      s"$root/a/ivf")
+
+    // the same tick, every artifact write one after another
+    val (dedupB, bpeB, ivfB) = (s"$root/b/dedup", s"$root/b/bpe", s"$root/b/ivf")
+    val norm = batch.where(col("doc_id").isNotNull)
+      .withColumn("text", trim(col("text")))
+      .where(col("text").isNotNull && length(col("text")) > 0)
+    val v = IncrementalDedup.verdicts(spark, norm, "doc_id", "text", dedupB)
+      .localCheckpoint(true)
+    val byStatus = v.groupBy("status").count().as[(String, Long)].collect().toMap
+    val uniq = norm.join(v.where(col("status") === "unique").select("doc_id"),
+      Seq("doc_id")).localCheckpoint(true)
+    val sigs = Dedup.minhashSignatureArray(uniq, "doc_id", "text", 8)
+      .localCheckpoint(true)
+    KeyedParquetSink.upsert(spark, s"$dedupB/hashes",
+      uniq.groupBy(md5(col("text")).as("h")).agg(min(col("doc_id")).as("keeper")),
+      Seq("h"), 8)
+    KeyedParquetSink.upsert(spark, s"$dedupB/bands", Dedup.lshBands(sigs, 4),
+      Seq("bandkey", "doc"), 8)
+    KeyedParquetSink.upsert(spark, s"$dedupB/sigs", sigs, Seq("doc"), 8)
+    val tp = TokenizerModel.segment(spark, uniq, "doc_id", "text", bpeB)
+      .agg(sum(col("n_tokens")), sum(col("n_pieces"))).head
+    val appended = IvfIndex.append(spark,
+      uniq.where(col("embedding").isNotNull).select(col("doc_id"), col("embedding")),
+      "doc_id", "embedding", ivfB, 16)
+    val want = Pipelines.IngestReport(norm.count(), byStatus.getOrElse("exact_dup", 0L),
+      byStatus.getOrElse("near_dup", 0L), uniq.count(), tp.getLong(0), tp.getLong(1),
+      appended)
+    assert(got == want)
+    assert(got.uniques == 3L && got.vectorsAppended == 3L, s"$got")
+    // stored tables, bucket column included, row for row
+    def rows(path: String): Seq[String] =
+      spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+    Seq("dedup/hashes", "dedup/bands", "dedup/sigs", "ivf/vectors",
+        "ivf/centroids").foreach { t =>
+      assert(rows(s"$root/a/$t") == rows(s"$root/b/$t"), s"$t differs")
+    }
+
+    val replay = Pipelines.ingest(spark, batch, s"$root/a/dedup", s"$root/a/bpe",
+      s"$root/a/ivf")
+    assert(replay.uniques == 0L && replay.vectorsAppended == 0L &&
+      replay.tokensSeen == 0L, s"replay must ingest 0: $replay")
+  }
+
+  test("jobs launched from Overlap threads carry the caller's job group") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("overlap-spec")).foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("overlap-spec", "overlap spec", interruptOnCancel = false)
+      try Overlap(spark.range(0, 100, 1, 3).count(),
+        spark.range(0, 100, 1, 5).count())
+      finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (groups.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.size >= 2, s"jobs seen under the group: $groups")
+    } finally sc.removeSparkListener(listener)
+
+    // the Runner path: a stage whose jobs all run on Overlap threads is
+    // still tallied by Progress (3 + 5 tasks, plus the stage's own count)
+    Runner.clearStop()
+    val report = Runner.run(spark, Seq(Runner.Stage("overlap_prog", s => {
+      Overlap(s.range(0, 100, 1, 3).count(), s.range(0, 100, 1, 5).count())
+      s.range(0, 1, 1, 1).toDF()
+    })), retries = 1)
+    assert(report.ok)
+    val deadline = System.nanoTime() + 10000000000L
+    var p = Progress.of("overlap_prog").get
+    while ((p.tasksDone < 9 || p.tasksDone < p.tasksTotal) &&
+           System.nanoTime() < deadline) {
+      Thread.sleep(50); p = Progress.of("overlap_prog").get
+    }
+    assert(p.tasksDone >= 9 && p.tasksDone == p.tasksTotal, s"$p")
+  }
+
+  test("Overlap waits for every step and rethrows the first failure after all end") {
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Overlap(
+        throw new IllegalStateException("first"),
+        { Thread.sleep(300); slowDone.set(true); 1 },
+        throw new IllegalArgumentException("third"))
+    }
+    assert(e.getMessage == "first")
+    assert(slowDone.get(), "a failure must not return before every step ends")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("third"))
+    assert(Overlap("a", 2) == (("a", 2)))
+  }
 }

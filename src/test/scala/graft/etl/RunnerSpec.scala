@@ -37,6 +37,18 @@ class RunnerSpec extends AnyFunSuite {
     assert(report.results.head.attempts == 2 && report.results.head.error.contains("permanent"))
   }
 
+  test("an interrupted stage is attempted once and the interrupt propagates") {
+    val calls = new AtomicInteger(0)
+    val stages = Seq(Runner.Stage("interrupted", _ => {
+      calls.incrementAndGet()
+      throw new InterruptedException("stop now")
+    }))
+    intercept[InterruptedException] {
+      Runner.run(spark, stages, retries = 3, backoffMs = 1)
+    }
+    assert(calls.get() == 1, "an interrupt must not be retried")
+  }
+
   test("runScheduled repeats the pipeline and collects every report") {
     Runner.clearStop()
     val calls = new AtomicInteger(0)

@@ -83,6 +83,22 @@ class HttpShellSpec extends AnyFunSuite {
     } finally shell.stop()
   }
 
+  test("a restarted shell continues the persisted run history instead of overwriting it") {
+    val hist = java.nio.file.Files.createTempDirectory("graft-shell-hist")
+      .toString + "/history"
+    Seq(1, 2).foreach { _ =>
+      val shell = new HttpShell(spark, stages, historyPath = Some(hist))
+      val port = shell.start()
+      try assert(post(port, "/api/start-etl-force").statusCode() == 200)
+      finally shell.stop()
+    }
+    val runs = Runner.runHistory(spark, hist)
+      .groupBy("run_id").count().orderBy("run_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(runs == Seq((1L, 2L), (2L, 2L)),
+      s"both shells' runs must keep their (run_id, stage) rows: $runs")
+  }
+
   test("scheduler lifecycle: invalid cron 400, start 200, double-start " +
     "400, stop 200, stop-again 400") {
     val shell = new HttpShell(spark, stages)

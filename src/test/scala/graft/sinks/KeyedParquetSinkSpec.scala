@@ -5,10 +5,42 @@ import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.sources.Formats
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicReference
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.etl.Overlap
 
-class KeyedParquetSinkSpec extends AnyFunSuite {
+class KeyedParquetSinkSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** The query execution of the first parquet write `f` issues (listener
+    * events are async — poll until it arrives). */
+  private def writeOf(f: => Unit): QueryExecution = {
+    val seen = new AtomicReference[QueryExecution](null)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        if (qe.logical.isInstanceOf[InsertIntoHadoopFsRelationCommand])
+          seen.compareAndSet(null, qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      val deadline = System.nanoTime() + 10000000000L
+      while (seen.get == null && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(seen.get != null, "no parquet write observed")
+    seen.get
+  }
 
   test("upsert rewrites only touched buckets and merges last-write-wins") {
     val dir = Files.createTempDirectory("graft_sink").toString + "/table"
@@ -179,5 +211,83 @@ class KeyedParquetSinkSpec extends AnyFunSuite {
     KeyedParquetSink.upsert(spark, dir,
       Seq((9L, "z", 9.0)).toDF("id", "name", "v"), Seq("id"), numBuckets = 4)
     assert(KeyedParquetSink.read(spark, dir).count() == 1L)
+  }
+
+  test("mergeInto merges and writes behind ONE shuffle, with no cache") {
+    val dir = Files.createTempDirectory("graft_sink_plan").toString + "/t"
+    val base = (1L to 40L).map(i => (i, s"n$i", i * 1.0)).toDF("id", "name", "v")
+    KeyedParquetSink.write(base, dir, Seq("id"), numBuckets = 8)
+    val updates = Seq((3L, "x", 3.5), (17L, "y", 17.5), (99L, "z", 99.0))
+      .toDF("id", "name", "v")
+    val qe = writeOf(KeyedParquetSink.upsert(spark, dir, updates, Seq("id"),
+      numBuckets = 8))
+    val plan = qe.executedPlan
+    // the observed write really is the merge (windows + survivor metrics)
+    assert(collect(plan) { case w: WindowExec => w }.nonEmpty, plan.toString)
+    assert(qe.logical.collect { case c: CollectMetrics => c }.size == 1)
+    val shuffles = collect(plan) { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size == 1, s"want one exchange for merge + write:\n$plan")
+    assert(collect(plan) { case m: InMemoryTableScanExec => m }.isEmpty &&
+      qe.optimizedPlan.collect { case r: InMemoryRelation => r }.isEmpty,
+      s"the merge must not go through a cache:\n$plan")
+    // and it still merged right, one file per rewritten bucket
+    val got = KeyedParquetSink.read(spark, dir).orderBy("id")
+      .as[(Long, String, Double)].collect().toSeq
+    assert(got.size == 41 && got.contains((3L, "x", 3.5)) &&
+      got.contains((17L, "y", 17.5)) && got.contains((99L, "z", 99.0)))
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("_bucket="))
+      .foreach { b =>
+        assert(b.listFiles().count(_.getName.endsWith(".parquet")) == 1,
+          s"${b.getName} holds more than one data file")
+      }
+  }
+
+  test("a mergeInto whose deleteCond removes every row leaves a readable zero-row table") {
+    val dir = Files.createTempDirectory("graft_sink_delall").toString + "/t"
+    val base = Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0))
+      .toDF("id", "name", "v")
+    KeyedParquetSink.write(base, dir, Seq("id"), numBuckets = 4)
+    val deletes = base.withColumn("op", lit("D"))
+    KeyedParquetSink.mergeInto(spark, dir, deletes, Seq("id"), numBuckets = 4,
+      deleteCond = Some(col("op") === "D"))
+    val back = KeyedParquetSink.read(spark, dir)
+    assert(back.count() == 0L)
+    assert(back.columns.toSet == Set("id", "name", "v"))
+    KeyedParquetSink.upsert(spark, dir,
+      Seq((9L, "z", 9.0)).toDF("id", "name", "v"), Seq("id"), numBuckets = 4)
+    assert(KeyedParquetSink.read(spark, dir).as[(Long, String, Double)]
+      .collect().toSeq == Seq((9L, "z", 9.0)))
+  }
+
+  test("an empty-source upsert is a no-op and returns") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val dir = Files.createTempDirectory("graft_sink_noop").toString + "/t"
+    val base = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
+    KeyedParquetSink.write(base, dir, Seq("id"), numBuckets = 4)
+    val before = new java.io.File(dir).list().sorted.toSeq
+    // bounded wait: a survivors observation on a write that never runs
+    // would block forever
+    Await.result(Future(KeyedParquetSink.upsert(spark, dir, base.limit(0),
+      Seq("id"), numBuckets = 4))(ExecutionContext.global), 60.seconds)
+    assert(new java.io.File(dir).list().sorted.toSeq == before)
+    assert(KeyedParquetSink.read(spark, dir).orderBy("id")
+      .as[(Long, String)].collect().toSeq == Seq((1L, "a"), (2L, "b")))
+  }
+
+  test("upserts into different tables from two threads both land") {
+    val root = Files.createTempDirectory("graft_sink_par").toString
+    val (a, b) = (s"$root/a", s"$root/b")
+    KeyedParquetSink.write(Seq((1L, "a")).toDF("id", "name"), a, Seq("id"), 4)
+    KeyedParquetSink.write(Seq((1L, 10L)).toDF("k", "n"), b, Seq("k"), 8)
+    Overlap(
+      KeyedParquetSink.upsert(spark, a,
+        Seq((1L, "a2"), (2L, "b")).toDF("id", "name"), Seq("id"), 4),
+      KeyedParquetSink.upsert(spark, b,
+        Seq((2L, 20L), (3L, 30L)).toDF("k", "n"), Seq("k"), 8))
+    assert(KeyedParquetSink.read(spark, a).orderBy("id").as[(Long, String)]
+      .collect().toSeq == Seq((1L, "a2"), (2L, "b")))
+    assert(KeyedParquetSink.read(spark, b).orderBy("k").as[(Long, Long)]
+      .collect().toSeq == Seq((1L, 10L), (2L, 20L), (3L, 30L)))
   }
 }
